@@ -201,120 +201,116 @@ object Pipeline {
 
   // ---------------------------------------------------------------- blocking
 
-  /** distinct strings → candidate string pairs (src < dst).
+  /** distinct strings → candidate string pairs (src < dst), each pair
+    * exactly once.
     *
-    * Prefix-filtered blocking (the size/prefix filters of the fuzzy-join
-    * literature — PAPERS.md MF-Join; the reference's analogue is the
-    * posting-count candidate cut, typeahead.cc:409-423): each string
-    * GENERATES pairs only from its `prefixKeys` globally-rarest trigrams.
-    * A 1-edit pair disturbs ≤4 of ~20 grams, so both sides keep their
-    * rarest shared grams in-prefix and the pair is still generated, while
-    * Zipf-hot grams (shared by thousands of strings — zero discriminative
-    * signal) stop producing quadratic blocks at all. Residual over-hot
-    * prefix blocks are capped at maxBlockSize with the dropped volume
-    * logged (the reference's kMaxMatches=6000 cap, typeahead.cc:428).
-    * Precision is NOT blocking's job here — every candidate pair goes
+    * Keys. Two key families share one tagged Long key space: trigram keys
+    * (24-bit, as `trigram_keys` packs them) and per-token Double-Metaphone
+    * codes of length ≥ 3 (`phonetic_keys`: ≤ 6 ASCII bytes packed exactly
+    * above a tag bit — no hashing, so two keys never merge). Trigrams are
+    * prefix-filtered (the size/prefix filters of the fuzzy-join literature
+    * — PAPERS.md MF-Join; the reference's analogue is the posting-count
+    * candidate cut, typeahead.cc:409-423): a string offers only its
+    * `prefixKeys` globally-rarest trigrams of frequency ≥ 2. A 1-edit pair
+    * disturbs ≤4 of ~20 grams, so both sides keep their rarest shared
+    * grams in-prefix, while Zipf-hot grams stop producing quadratic blocks.
+    * A key is KEPT when 2 ≤ (strings offering it) ≤ maxBlockSize; hot keys
+    * are dropped whole with their volume in the stats (the reference's
+    * kMaxMatches=6000 cap, typeahead.cc:428).
+    *
+    * Pairs. Each string carries the sorted list of its kept keys, and one
+    * block table groups (string_id, keys) by kept key. Block k emits a
+    * member pair only when k is the least kept key the two share
+    * (`least_common_key_pairs`, a merge walk over the two sorted lists:
+    * the LeCoBI condition of SparkER, the first-shared-prefix-token rule of
+    * the MapReduce fuzzy joins). A pair sharing several blocks therefore
+    * comes out of exactly one, and no dedup exchange on (src, dst) runs.
+    * The lists must hold kept keys, not all offered keys: when the least
+    * shared offered key is hot, the pair must still come from its next
+    * kept key. Precision is NOT blocking's job — every candidate pair goes
     * through the codegen'd scalar gate + hub rule (scorePairs/matchEdges).
-    * Double-Metaphone phonetic keys union in as a second key family.
+    *
+    * Stats cover the prefix trigram keys only, not the phonetic keys:
+    * totalKeys offered trigram keys, keptKeys kept, hotKeysDropped /
+    * hotVolumeDropped the trigram keys over the cap and their string
+    * counts. The returned pairs are persisted and counted.
     */
   def candidatePairs(strings: DataFrame, cfg: Config): (DataFrame, BlockingStats) = {
     val spark = strings.sparkSession
     import spark.implicits._
 
-    val m = strings
-      .select($"string_id", $"match_key", gf.trigram_keys($"match_key").as("tris"))
-
-    val keyed = m.select($"string_id", explode($"tris").as("key"))
+    val keyed = strings
+      .select($"string_id", explode(gf.trigram_keys($"match_key")).as("key"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val freq = keyed.groupBy($"key").agg(count(lit(1)).as("cnt"))
 
     // per-string prefix: the K globally-rarest grams with freq ≥ 2
-    // (deterministic order). Singleton grams are excluded BEFORE ranking:
-    // a freq-1 gram can never generate a pair, yet typo-created grams are
-    // exactly the globally-rarest ones — letting them occupy prefix slots
-    // crowds out the shared grams that actually recall the pair.
-    // top-K selection by hash aggregate instead of a row_number window:
-    // the window form sorts the WHOLE keyed-gram table by
-    // (string_id, cnt, key); the aggregate form hash-groups and sorts
-    // ~20 elements per group — same selected set (array_sort on
-    // struct(cnt, key) is the same lexicographic (cnt asc, key asc)
-    // order the window used; slice keeps the first prefixKeys).
-    val prefixed = keyed
+    // (deterministic (cnt, key) order). Singleton grams are excluded
+    // BEFORE ranking: a freq-1 gram can never generate a pair, yet
+    // typo-created grams are exactly the globally-rarest ones — letting
+    // them occupy prefix slots crowds out the shared grams that actually
+    // recall the pair. Top-K by hash aggregate: ~20 grams sorted per
+    // string instead of a window sort of the whole keyed-gram table.
+    val prefixKeys = keyed
       .join(freq.filter($"cnt" >= 2), Seq("key"))
       .groupBy($"string_id")
-      .agg(slice(array_sort(collect_list(struct($"cnt", $"key"))),
+      .agg(slice(sort_array(collect_list(struct($"cnt", $"key"))),
         1, cfg.prefixKeys).as("topk"))
-      .select($"string_id", explode($"topk").as("e"))
-      .select($"string_id", $"e.key".as("key"))
+      .select($"string_id", explode($"topk.key".cast("array<bigint>")).as("key"))
+    val phoneticKeys = strings
+      .select($"string_id", explode(gf.phonetic_keys($"match_key")).as("key"))
+    val offered = prefixKeys.unionByName(phoneticKeys)
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val pfreq = prefixed.groupBy($"key").agg(count(lit(1)).as("cnt"))
+    val kfreq = offered.groupBy($"key").agg(count(lit(1)).as("cnt"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val (totalKeys, hotKeys, hotVolume, keptKeyCount) =
       if (cfg.collectStats) {
-        val agg = pfreq.agg(count(lit(1)).as("t"),
-          coalesce(sum(when($"cnt" > cfg.maxBlockSize, 1L).otherwise(0L)), lit(0L)).as("k"),
-          coalesce(sum(when($"cnt" > cfg.maxBlockSize, $"cnt").otherwise(0L)), lit(0L)).as("v"),
-          // keptKeys counted from the kept predicate itself, NOT derived
-          // as total - hot: prefix keys whose pfreq is 1 (a gram that
-          // survived into only one string's prefix after rank truncation)
-          // are dropped by the kept filter too, so total - hot overcounts
-          coalesce(sum(when($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize, 1L)
-            .otherwise(0L)), lit(0L)).as("kk"))
+        val agg = kfreq.filter($"key" < gf.ExprKernels.PhoneticKeyTag)
+          .agg(count(lit(1)).as("t"),
+            coalesce(sum(when($"cnt" > cfg.maxBlockSize, 1L).otherwise(0L)), lit(0L)).as("k"),
+            coalesce(sum(when($"cnt" > cfg.maxBlockSize, $"cnt").otherwise(0L)), lit(0L)).as("v"),
+            // keptKeys counted from the kept predicate itself, NOT derived
+            // as total - hot: keys offered by one string only (a gram that
+            // survived into a single prefix after rank truncation) are
+            // dropped by the kept filter too, so total - hot overcounts
+            coalesce(sum(when($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize, 1L)
+              .otherwise(0L)), lit(0L)).as("kk"))
           .collect()(0)
         (agg.getLong(0), agg.getLong(1), agg.getLong(2), agg.getLong(3))
       } else (-1L, -1L, -1L, -1L)
-    val kept = pfreq.filter($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize)
+    val kept = kfreq.filter($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize).select($"key")
+
+    val keyLists = offered.join(kept, Seq("key"))
+      .groupBy($"string_id")
+      .agg(sort_array(collect_list($"key")).as("keys"))
 
     // AQE sizes stages by their INPUT bytes, so the aggregated block list
     // (~small) gets coalesced to a couple of partitions — and the pair
-    // explosion below (quadratic in block size) would then run in those
+    // emission below (quadratic in block size) would then run in those
     // few tasks, serializing the whole stage (measured: blocking 47 s at
     // 2 cores → 41 s at 8 cores before this repartition). Explicit
     // round-robin repartition of the cheap aggregated rows restores full
-    // parallelism for the expensive explode.
+    // parallelism for the expensive expansion.
     val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val blocks = prefixed
-      .join(kept.select($"key"), Seq("key")) // drops singleton + capped keys
+    val blocks = keyLists
+      .select($"string_id", $"keys", explode($"keys").as("key"))
       .groupBy($"key")
-      .agg(collect_list($"string_id").as("members"))
+      .agg(collect_list(struct($"string_id", $"keys")).as("members"))
       .repartition(sessionParts)
 
-    // map-side pair expansion: bounded by maxBlockSize² per key, ≤
-    // prefixKeys blocks per string
-    val trigramPairs = blocks
-      .select(explode($"members").as("src"), $"members")
-      .select($"src", explode($"members").as("dst"))
-      .filter($"src" < $"dst")
-
-    // phonetic blocking: per-token Double Metaphone codes (len >= 3);
-    // the scorer does the precision work on these coarse keys.
-    val phonKeyed = strings
-      .select($"string_id",
-        explode(array_distinct(transform(
-          split($"match_key", " "),
-          t => gf.double_metaphone(t)))).as("pkey"))
-      .filter(length($"pkey") >= 3)
-    val phonFreq = phonKeyed.groupBy($"pkey").agg(count(lit(1)).as("cnt"))
-    val phonBlocks = phonKeyed
-      .join(phonFreq.filter($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize).select($"pkey"), Seq("pkey"))
-      .groupBy($"pkey").agg(collect_list($"string_id").as("ids"))
-      .repartition(sessionParts) // same explode-parallelism guard as above
-    val phonPairs = phonBlocks
-      .select(explode($"ids").as("src"), $"ids")
-      .select($"src", explode($"ids").as("dst"))
-      .filter($"src" < $"dst")
-      .select($"src", $"dst")
-
-    val pairs = trigramPairs.unionByName(phonPairs).dropDuplicates("src", "dst")
+    // map-side pair expansion: bounded by maxBlockSize² per block, each
+    // pair emitted by its least common kept key only
+    val pairs = blocks
+      .select(inline(gf.least_common_key_pairs($"key", $"members")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // always materialize here: the prefix/pfreq caches feed the pair DAG
-    // twice each, so they must still be cached when it first computes
+    // always materialize here: the keyed/offered/kfreq caches feed the
+    // pair DAG, so they must still be cached when it first computes
     // (collectStats only gates the *extra* stats aggregation above)
     val nPairs = pairs.count()
     keyed.unpersist()
-    prefixed.unpersist()
-    pfreq.unpersist()
+    offered.unpersist()
+    kfreq.unpersist()
 
     val stats = BlockingStats(
       totalKeys = totalKeys,

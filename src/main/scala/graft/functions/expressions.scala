@@ -308,6 +308,56 @@ case class DoubleMetaphoneKey(child: Expression)
   override def prettyName: String = "double_metaphone"
 }
 
+/** The phonetic half of the ER blocking key space
+  * (ExprKernels.phoneticKeys): sorted distinct Double-Metaphone codes of
+  * length ≥ 3 over the space-separated tokens, each packed exactly into a
+  * Long above ExprKernels.PhoneticKeyTag. String → array<bigint>. */
+case class PhoneticKeys(child: Expression)
+    extends UnaryExpression with StringArgs {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullSafeEval(input: Any): Any =
+    ExprKernels.phoneticKeys(input.asInstanceOf[UTF8String].toString)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"graft.functions.ExprKernels.phoneticKeys($c.toString())")
+  override protected def withNewChildInternal(newChild: Expression): PhoneticKeys =
+    copy(child = newChild)
+  override def prettyName: String = "phonetic_keys"
+}
+
+/** Least-common-key pair emission for one blocking block
+  * (ExprKernels.leastCommonKeyPairs): (key: bigint, members:
+  * array<struct<id: bigint, keys: array<bigint>>>) → array<struct<src,
+  * dst>> of the member pairs whose least shared key is `key`. With every
+  * member carrying its full sorted key list, each pair sharing a block
+  * is emitted by exactly one block (the LeCoBI condition). */
+case class LeastCommonKeyPairs(left: Expression, right: Expression)
+    extends BinaryExpression {
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("src", LongType, nullable = false),
+    StructField("dst", LongType, nullable = false))), containsNull = false)
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    (left.dataType, right.dataType) match {
+      case (LongType, ArrayType(StructType(Array(
+          StructField(_, LongType, _, _),
+          StructField(_, ArrayType(LongType, false), _, _))), _)) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+      case (l, r) =>
+        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+          s"$prettyName requires (bigint, array<struct<bigint, array<bigint> " +
+            s"without nulls>>), got ${l.simpleString}, ${r.simpleString}")
+    }
+  override def nullSafeEval(k: Any, m: Any): Any =
+    ExprKernels.leastCommonKeyPairs(k.asInstanceOf[Long],
+      m.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (k, m) =>
+      s"graft.functions.ExprKernels.leastCommonKeyPairs($k, $m)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): LeastCommonKeyPairs =
+    copy(left = l, right = r)
+  override def prettyName: String = "least_common_key_pairs"
+}
+
 /** Static kernels referenced from generated code (one static call each —
   * keeps codegen tiny and JIT-inlineable). */
 /** Exact point-in-polygon crossing number (reference J5 refinement,
@@ -581,15 +631,22 @@ object ExprKernels {
         .hashUnsafeBytes(sb, off, sb.length, 42L)
       i += 1
     }
-    java.util.Arrays.sort(hs)
-    var n = 0
-    var j = 0
-    while (j < hs.length) {
-      if (j == 0 || hs(j) != hs(j - 1)) { hs(n) = hs(j); n += 1 }
-      j += 1
+    sortedDistinct(hs, hs.length)
+  }
+
+  /** The first `n` values of `vs`, sorted ascending and deduplicated
+    * (sorts `vs` in place). */
+  private def sortedDistinct(vs: Array[Long], n: Int)
+      : org.apache.spark.sql.catalyst.expressions.UnsafeArrayData = {
+    java.util.Arrays.sort(vs, 0, n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (i == 0 || vs(i) != vs(i - 1)) { vs(m) = vs(i); m += 1 }
+      i += 1
     }
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(java.util.Arrays.copyOf(hs, n))
+      .fromPrimitiveArray(java.util.Arrays.copyOf(vs, m))
   }
 
   /** q25 hyperplane weights as +1 bitmasks: bit (i-1) of mask j set ⇔
@@ -723,6 +780,101 @@ object ExprKernels {
   def doubleMetaphone(s: String): String = {
     val code = metaphone.doubleMetaphone(s)
     if (code == null) "" else code
+  }
+
+  /** Tag bit of the phonetic half of the blocking key space: trigram keys
+    * are 24-bit, so every tagged phonetic key sorts above every trigram. */
+  val PhoneticKeyTag: Long = 1L << 48
+
+  /** A Double-Metaphone code packed exactly into the tagged key space: up
+    * to 6 non-NUL ASCII bytes, big-endian below the tag bit. No hashing,
+    * so distinct codes never share a key; a code that does not fit fails
+    * the job rather than colliding. */
+  def phoneticKey(code: String): Long = {
+    if (code.length > 6)
+      throw new IllegalStateException(
+        s"phonetic code '$code' exceeds the 6 bytes the blocking key packs")
+    var v = 0L
+    var i = 0
+    while (i < code.length) {
+      val c = code.charAt(i)
+      if (c == 0 || c > 0x7F)
+        throw new IllegalStateException(
+          s"phonetic code '$code' is not NUL-free ASCII; cannot pack it exactly")
+      v = (v << 8) | c
+      i += 1
+    }
+    PhoneticKeyTag | v
+  }
+
+  /** Sorted distinct tagged phonetic keys of a match key: the
+    * Double-Metaphone code of every space-separated token, codes shorter
+    * than 3 dropped (too coarse to block on). */
+  def phoneticKeys(s: String): org.apache.spark.sql.catalyst.expressions.UnsafeArrayData = {
+    val toks = splitKeepAll(s)
+    val ks = new Array[Long](toks.length)
+    var n = 0
+    var i = 0
+    while (i < toks.length) {
+      val code = doubleMetaphone(toks(i))
+      if (code.length >= 3) { ks(n) = phoneticKey(code); n += 1 }
+      i += 1
+    }
+    sortedDistinct(ks, n)
+  }
+
+  /** true iff the least element the two ascending arrays share is `key`.
+    * The walk stops at the first shared element, which is never past
+    * `key` when both arrays contain it. */
+  private def leastSharedIs(a: Array[Long], b: Array[Long], key: Long): Boolean = {
+    var i = 0
+    var j = 0
+    while (i < a.length && j < b.length) {
+      val x = a(i)
+      val y = b(j)
+      if (x == y) return x == key
+      if (x < y) i += 1 else j += 1
+    }
+    false
+  }
+
+  /** Block `key`'s candidate pairs, each pair of members emitted only when
+    * `key` is the least key the two share (members: array<struct<id,
+    * keys>>, keys ascending and distinct). Every pair of strings sharing
+    * at least one block is therefore emitted by exactly one block, with
+    * no dedup pass. Output: array<struct<src, dst>>, src < dst. Null
+    * members and members with null key lists take part in no pair. */
+  def leastCommonKeyPairs(key: Long,
+      members: org.apache.spark.sql.catalyst.util.ArrayData): GenericArrayData = {
+    val n = members.numElements()
+    val ids = new Array[Long](n)
+    val keys = new Array[Array[Long]](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!members.isNullAt(i)) {
+        val s = members.getStruct(i, 2)
+        if (!s.isNullAt(0) && !s.isNullAt(1)) {
+          ids(m) = s.getLong(0)
+          keys(m) = s.getArray(1).toLongArray()
+          m += 1
+        }
+      }
+      i += 1
+    }
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    i = 0
+    while (i < m) {
+      var j = i + 1
+      while (j < m) {
+        if (leastSharedIs(keys(i), keys(j), key))
+          out += org.apache.spark.sql.catalyst.InternalRow(
+            math.min(ids(i), ids(j)), math.max(ids(i), ids(j)))
+        j += 1
+      }
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
   }
 
   def formatAddress(houseNumber: String, road: String, postcode: String,
@@ -988,7 +1140,9 @@ object ExprKernels {
     * shape shuffled every window hash of the corpus by doc_id just to
     * run a per-doc sliding min, which at 100 TB is a full-corpus shuffle
     * for a computation that never leaves the row. Returns null for docs
-    * with fewer than W tokens (the declarative filter's row drop). */
+    * with fewer than W tokens (the declarative filter's row drop). A null
+    * token keeps its position but adds no text, exactly as
+    * `concat_ws(" ", slice(tokens, p, W))` skips it. */
   def winnowFps(toks: org.apache.spark.sql.catalyst.util.ArrayData,
       w: Int, k: Int): GenericArrayData = {
     val n = toks.numElements()
@@ -999,17 +1153,22 @@ object ExprKernels {
     val tokBytes = new Array[Array[Byte]](n)
     var i = 0
     while (i < n) {
-      tokBytes(i) = toks.getUTF8String(i).getBytes
+      if (!toks.isNullAt(i)) tokBytes(i) = toks.getUTF8String(i).getBytes
       i += 1
     }
     val digests = new Array[Array[Byte]](nw)
     var p = 0
     while (p < nw) {
       md.reset()
+      var wrote = false
       var j = 0
       while (j < w) {
-        if (j > 0) md.update(' '.toByte)
-        md.update(tokBytes(p + j))
+        val b = tokBytes(p + j)
+        if (b != null) {
+          if (wrote) md.update(' '.toByte)
+          md.update(b)
+          wrote = true
+        }
         j += 1
       }
       digests(p) = md.digest()

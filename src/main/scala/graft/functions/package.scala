@@ -72,6 +72,15 @@ package object functions {
   /** Double Metaphone phonetic key. */
   def double_metaphone(c: Column): Column = col(DoubleMetaphoneKey(ex(c)))
 
+  /** sorted distinct tagged Double-Metaphone token keys (length ≥ 3) of
+    * a match key — the phonetic half of the ER blocking key space. */
+  def phonetic_keys(c: Column): Column = col(PhoneticKeys(ex(c)))
+
+  /** block `key`'s member pairs (src < dst) whose least shared key is
+    * `key`: members array<struct<id, keys>> → array<struct<src, dst>>. */
+  def least_common_key_pairs(key: Column, members: Column): Column =
+    col(LeastCommonKeyPairs(ex(key), ex(members)))
+
   /** canonical match key (normalize + alt expansion, graft.text.MatchKeys). */
   def match_key(c: Column): Column = col(MatchKey(ex(c)))
 
@@ -136,6 +145,8 @@ package object functions {
     reg.createOrReplaceTempFunction("ref_match_score_pre", es => RefMatchScorePre(es(0), es(1)), "scala_udf")
     reg.createOrReplaceTempFunction("ref_match_scores", es => RefMatchScores(es(0), es(1)), "scala_udf")
     reg.createOrReplaceTempFunction("double_metaphone", es => DoubleMetaphoneKey(es.head), "scala_udf")
+    reg.createOrReplaceTempFunction("phonetic_keys", es => PhoneticKeys(es.head), "scala_udf")
+    reg.createOrReplaceTempFunction("least_common_key_pairs", es => LeastCommonKeyPairs(es(0), es(1)), "scala_udf")
     reg.createOrReplaceTempFunction("match_key", es => MatchKey(es.head), "scala_udf")
     reg.createOrReplaceTempFunction("cosine_sim", es => CosineSim(es(0), es(1)), "scala_udf")
     reg.createOrReplaceTempFunction("point_in_ring", es => PointInRing(es(0), es(1), es(2)), "scala_udf")

@@ -175,11 +175,12 @@ object StreamOps {
     * cap, where the two are provably identical (StreamingSpec).
     *
     * Pairs may repeat across micro-batches when two strings share several
-    * blocking keys (the batch path's global dropDuplicates has no
-    * bounded-state streaming equivalent without a watermark on a
-    * timestamp the pair doesn't carry); downstream scoring is idempotent
-    * and the sink dedups by (src, dst) — the same sink-side contract as
-    * [[internIdCollisions]]. State shards by blocking key, so hot-key
+    * blocking keys. The batch path emits each pair once, from the least
+    * kept key the two strings share, but that rule needs both strings'
+    * final kept-key lists, and a stream learns a key's block size (and
+    * so whether it is kept) only as strings arrive; downstream scoring is
+    * idempotent and the sink dedups by (src, dst) — the same sink-side
+    * contract as [[internIdCollisions]]. State shards by blocking key, so hot-key
     * pressure spreads across the state store exactly like the batch
     * path's salted shuffle.
     *
@@ -209,22 +210,19 @@ object StreamOps {
       maxBlock: Int = 256): Dataset[KeyedBlockPair] = {
     import spark.implicits._
     import graft.{functions => gf}
+    // the batch path's tagged key space (Pipeline.candidatePairs): 24-bit
+    // trigram keys and packed per-token phonetic codes of length >= 3
     val keyed = strings.select(
       explode(array_union(
-        transform(gf.trigram_keys(col("match_key")),
-          k => concat(lit("t:"), k.cast("string"))),
-        filter(
-          transform(array_distinct(transform(split(col("match_key"), " "),
-            t => gf.double_metaphone(t))),
-            p => concat(lit("p:"), p)),
-          p => length(p) >= 5))).as("bkey"), // "p:" + code of length >= 3
+        gf.trigram_keys(col("match_key")).cast("array<bigint>"),
+        gf.phonetic_keys(col("match_key")))).as("bkey"),
       col("string_id").cast("long").as("string_id"),
       col("match_key").cast("string").as("match_key"))
-    keyed.as[(String, Long, String)]
+    keyed.as[(Long, Long, String)]
       .groupByKey(_._1)
       .flatMapGroupsWithState[BlockState, KeyedBlockPair](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[(String, Long, String)],
+        (_: Long, rows: Iterator[(Long, Long, String)],
             state: GroupState[BlockState]) =>
           val st = state.getOption.getOrElse(BlockState(Vector.empty, saturated = false))
           if (st.saturated) Iterator.empty

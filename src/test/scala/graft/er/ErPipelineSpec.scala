@@ -1,5 +1,6 @@
 package graft.er
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
@@ -199,6 +200,96 @@ class ErPipelineSpec extends AnyFunSuite {
       .filter(($"src" === idCtxHub && $"dst" === idOtherHub) ||
         ($"src" === idOtherHub && $"dst" === idCtxHub)).count()
     assert(fused == 0, "entities two edits apart with equal freq must not link")
+  }
+
+  /** Test-only oracle: the former pair stage. Trigram-prefix blocks and
+    * phonetic blocks, each exploded to all member pairs, unioned, then
+    * deduplicated on (src, dst). */
+  private def explodeDedupPairs(strings: DataFrame, cfg: Pipeline.Config): DataFrame = {
+    import graft.{functions => gf}
+    val keyed = strings.select($"string_id", explode(gf.trigram_keys($"match_key")).as("key"))
+    val freq = keyed.groupBy($"key").agg(count(lit(1)).as("cnt"))
+    val prefixed = keyed.join(freq.filter($"cnt" >= 2), Seq("key"))
+      .groupBy($"string_id")
+      .agg(slice(array_sort(collect_list(struct($"cnt", $"key"))), 1, cfg.prefixKeys).as("topk"))
+      .select($"string_id", explode($"topk").as("e"))
+      .select($"string_id", $"e.key".as("key"))
+    val pfreq = prefixed.groupBy($"key").agg(count(lit(1)).as("cnt"))
+    val kept = pfreq.filter($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize)
+    val trigramPairs = prefixed.join(kept.select($"key"), Seq("key"))
+      .groupBy($"key").agg(collect_list($"string_id").as("members"))
+      .select(explode($"members").as("src"), $"members")
+      .select($"src", explode($"members").as("dst"))
+      .filter($"src" < $"dst")
+    val phonKeyed = strings
+      .select($"string_id",
+        explode(array_distinct(transform(split($"match_key", " "),
+          t => gf.double_metaphone(t)))).as("pkey"))
+      .filter(length($"pkey") >= 3)
+    val phonFreq = phonKeyed.groupBy($"pkey").agg(count(lit(1)).as("cnt"))
+    val phonPairs = phonKeyed
+      .join(phonFreq.filter($"cnt" >= 2 && $"cnt" <= cfg.maxBlockSize).select($"pkey"), Seq("pkey"))
+      .groupBy($"pkey").agg(collect_list($"string_id").as("ids"))
+      .select(explode($"ids").as("src"), $"ids")
+      .select($"src", explode($"ids").as("dst"))
+      .filter($"src" < $"dst")
+    trigramPairs.unionByName(phonPairs).dropDuplicates("src", "dst")
+  }
+
+  /** candidatePairs equals the explode+dedup oracle as a set and emits
+    * no (src, dst) twice; returns the pairs. */
+  private def assertSameAsDedup(strings: DataFrame, cfg: Pipeline.Config,
+      tag: String): (DataFrame, Pipeline.BlockingStats) = {
+    val (pairs, stats) = Pipeline.candidatePairs(strings, cfg)
+    val oracle = explodeDedupPairs(strings, cfg)
+    val n = pairs.count()
+    assert(n == stats.candidatePairs, s"[$tag] stats disagree with the pairs")
+    assert(n == pairs.select($"src", $"dst").distinct().count(),
+      s"[$tag] a (src, dst) pair was emitted more than once")
+    assert(pairs.exceptAll(oracle).isEmpty && oracle.exceptAll(pairs).isEmpty,
+      s"[$tag] pair set differs from explode+dedup: ${n} vs ${oracle.count()}")
+    (pairs, stats)
+  }
+
+  test("least-common-key pairs equal the explode+dedup pair set on two seeds") {
+    for (seed <- Seq(42L, 7L)) {
+      val pages = Corpus.pages(spark, 800, 150, seed).toDF()
+      val (strings, _) = Pipeline.internStrings(Pipeline.extractMentions(pages))
+      val (pairs, _) = assertSameAsDedup(strings,
+        Pipeline.Config(seed = seed, workDir = freshDir(s"lcb_$seed")), s"seed $seed")
+      assert(pairs.count() > 1000, s"seed $seed: too few pairs to mean anything")
+    }
+  }
+
+  test("least-common-key pairs: hot least key, phonetic-only and two-family pairs") {
+    import graft.text.Ngrams.trigramBlockingKeys
+    // maxBlockSize 3: the gram "qza" is offered by six strings and is
+    // capped, yet it is the least gram "qzaxyw" and "qzaxywk" share, so
+    // their pair must come from their next kept gram ("xyw")
+    val hotPair = (1L, "qzaxyw") -> (2L, "qzaxywk")
+    val hot = Seq((3L, "qzab"), (4L, "qzac"), (5L, "qzad"), (6L, "qzaf"))
+    // no shared gram; both Double-Metaphone to FKS
+    val phonPair = (7L, "fax") -> (8L, "phacks")
+    // shared grams and a shared code (HPTSTR)
+    val bothPair = (9L, "hauptstrasse") -> (10L, "hauptstrase")
+    val all = Seq(hotPair, phonPair, bothPair).flatMap { case (a, b) => Seq(a, b) } ++ hot
+    val strings = all.toDF("string_id", "match_key")
+    val cfg = Pipeline.Config(maxBlockSize = 3, workDir = freshDir("lcb_hand"))
+
+    def grams(s: String) = trigramBlockingKeys(s).toSet
+    val hotShared = grams("qzaxyw") intersect grams("qzaxywk")
+    val qza = trigramBlockingKeys("qza").head
+    assert(hotShared.min == qza && hotShared.size > 1,
+      "precondition: the capped gram is the least of several shared grams")
+    assert((grams("fax") intersect grams("phacks")).isEmpty,
+      "precondition: the phonetic pair shares no gram")
+
+    val (pairs, stats) = assertSameAsDedup(strings, cfg, "hand-built")
+    assert(stats.hotKeysDropped >= 1 && stats.hotVolumeDropped >= 6,
+      s"the capped gram must be reported: $stats")
+    for (((a, _), (b, _)) <- Seq(hotPair, phonPair, bothPair))
+      assert(pairs.filter($"src" === a && $"dst" === b).count() == 1,
+        s"pair ($a, $b) must be emitted exactly once")
   }
 
   test("blocking stats are reported (no silent caps)") {

@@ -234,6 +234,49 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("least_common_key_pairs emits each pair from its least shared key only") {
+    import spark.implicits._
+    val members = Seq((4L, Seq(9L)), (3L, Seq(5L, 9L)), (2L, Seq(1L, 5L)),
+      (1L, Seq(1L, 5L, 9L)))
+    val blocks = Seq(1L, 5L, 9L)
+      .map(k => (k, members.filter(_._2.contains(k))))
+      .toDF("key", "members")
+    val got = blocks.select($"key", inline(gf.least_common_key_pairs($"key", $"members")))
+      .as[(Long, Long, Long)].collect().toSeq
+    // (1,2) shares 1 and 5, (1,3) shares 5 and 9: each only from its least
+    assert(got.sorted == Seq((1L, 1L, 2L), (5L, 1L, 3L), (5L, 2L, 3L),
+      (9L, 1L, 4L), (9L, 3L, 4L)), got)
+    // interpreted path agrees with the generated one
+    val row = org.apache.spark.sql.catalyst.InternalRow
+    val keysOf = (ks: Seq[Long]) =>
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(ks.toArray)
+    val block5 = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      members.filter(_._2.contains(5L)).map { case (id, ks) => row(id, keysOf(ks)) }.toArray[Any])
+    val out = ExprKernels.leastCommonKeyPairs(5L, block5)
+    assert((0 until out.numElements()).map { i =>
+      val r = out.getStruct(i, 2); (r.getLong(0), r.getLong(1))
+    }.sorted == Seq((1L, 3L), (2L, 3L)))
+    val bad = intercept[org.apache.spark.sql.AnalysisException] {
+      Seq((1L, Seq((1L, Seq[java.lang.Long](1L, null))))).toDF("key", "members")
+        .select(gf.least_common_key_pairs($"key", $"members")).collect()
+    }
+    assert(bad.getMessage.contains("least_common_key_pairs"), bad.getMessage)
+  }
+
+  test("phonetic_keys packs sorted distinct codes exactly above the tag bit") {
+    import spark.implicits._
+    val got = Seq("fax phacks hauptstrasse ab", "", null).toDF("s")
+      .select(gf.phonetic_keys($"s")).as[Option[Seq[Long]]].collect().toSeq
+    val fks = ExprKernels.PhoneticKeyTag | 0x464B53L // "FKS"
+    assert(fks == ExprKernels.phoneticKey("FKS"))
+    val hptstr = ExprKernels.phoneticKey("HPTSTR")
+    // "ab" codes to "AP" (< 3 bytes) and is dropped; FKS appears once
+    assert(got == Seq(Some(Seq(fks, hptstr).sorted), Some(Nil), None), got)
+    assert(fks > (1L << 24), "phonetic keys sort above every 24-bit trigram key")
+    intercept[IllegalStateException](ExprKernels.phoneticKey("ABCDEFG"))
+    intercept[IllegalStateException](ExprKernels.phoneticKey("Ç0X"))
+  }
+
   test("codegen: expressions run inside WholeStageCodegen") {
     import spark.implicits._
     val df = spark.range(100)

@@ -199,10 +199,37 @@ class DedupSpec extends AnyFunSuite {
       "over-cap boilerplate fingerprints must be dropped whole")
   }
 
+  /** (doc_id, fp, pos) selected by the winnow_fps kernel over (doc_id, t). */
+  private def kernelWinnow(toks: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions._
+    import graft.{functions => gf}
+    toks
+      .select(col("doc_id"),
+        explode(gf.winnow_fps(col("t"), Dedup.SubstrW, Dedup.SubstrK)).as("x"))
+      .select(col("doc_id"), col("x.fp").as("fp"), col("x.pos").as("pos"))
+  }
+
+  /** The declarative explode → sliding-min → groupBy winnowing the kernel
+    * replaced, over the same (doc_id, t). */
+  private def declarativeWinnow(toks: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
+    toks
+      .select(col("doc_id"), col("t"),
+        explode(sequence(lit(1), size(col("t")) - (Dedup.SubstrW - 1))).as("pos"))
+      .select(col("doc_id"), col("pos"),
+        md5(concat_ws(" ", slice(col("t"), col("pos"), lit(Dedup.SubstrW)))
+          .cast("binary")).as("fp"))
+      .withColumn("m", min(struct(col("fp"), col("pos")))
+        .over(byDoc.rowsBetween(0, Dedup.SubstrK - 1)))
+      .groupBy(col("doc_id"), col("m.fp").as("fp"))
+      .agg(min(col("m.pos")).as("pos"))
+  }
+
   test("winnow_fps kernel is byte-equal to the declarative " +
       "explode→sliding-min→groupBy winnowing it replaced") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     import graft.{functions => gf}
     // corpus with internal repeats (same fp at several window positions —
@@ -222,24 +249,27 @@ class DedupSpec extends AnyFunSuite {
     val toks = docs
       .select(col("doc_id"), split(gf.normalize_text(col("text")), " ").as("t"))
       .filter(size(col("t")) >= Dedup.SubstrW)
-    val kernel = toks
-      .select(col("doc_id"),
-        explode(gf.winnow_fps(col("t"), Dedup.SubstrW, Dedup.SubstrK)).as("x"))
-      .select(col("doc_id"), col("x.fp").as("fp"), col("x.pos").as("pos"))
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    val declarative = toks
-      .select(col("doc_id"), col("t"),
-        explode(sequence(lit(1), size(col("t")) - (Dedup.SubstrW - 1))).as("pos"))
-      .select(col("doc_id"), col("pos"),
-        md5(concat_ws(" ", slice(col("t"), col("pos"), lit(Dedup.SubstrW)))
-          .cast("binary")).as("fp"))
-      .withColumn("m", min(struct(col("fp"), col("pos")))
-        .over(byDoc.rowsBetween(0, Dedup.SubstrK - 1)))
-      .groupBy(col("doc_id"), col("m.fp").as("fp"))
-      .agg(min(col("m.pos")).as("pos"))
+    val kernel = kernelWinnow(toks)
+    val declarative = declarativeWinnow(toks)
     assert(kernel.exceptAll(declarative).isEmpty &&
       declarative.exceptAll(kernel).isEmpty,
       "winnow_fps diverges from the declarative winnowing selection")
+  }
+
+  test("winnow_fps skips null tokens exactly as the declarative concat_ws does") {
+    import spark.implicits._
+    // array<string> with nullable elements passes analysis, so a null
+    // token must not reach the kernel's byte read
+    val toks = Seq(
+      (1L, Seq("a", null, "b", "c", "d", "e", "f", "g", "h", "i", "a", null)),
+      (2L, Seq[String](null, null, null, null, null, null, null, null, "x")),
+      (3L, Seq("p", "q", "", "s", "t", "u", "v", null))).toDF("doc_id", "t")
+    val kernel = kernelWinnow(toks)
+    val declarative = declarativeWinnow(toks)
+    assert(kernel.count() > 0)
+    assert(kernel.exceptAll(declarative).isEmpty &&
+      declarative.exceptAll(kernel).isEmpty,
+      "winnow_fps diverges from the declarative selection on null tokens")
   }
 
   test("q62 decontamination: a planted shared 8-gram flags the train doc, " +
