@@ -1,224 +1,287 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.hadoop.fs.{FileSystem, Path}
+import java.nio.file.{Files, Paths}
 import graft.{functions => gf}
+import StageTiming.timed
 
-/** Connected components as a standalone operator (the union-find /
-  * transitive-closure analogue of the reference's duplicate merging,
-  * generalized per north_rule). The in-query variant uses localCheckpoint
-  * to cut lineage each iteration; the checkpoint-to-parquet variant for
-  * resumable production runs lives in graft.er.Pipeline.cluster.
+/** Connected components, the union-find / transitive-closure analogue of
+  * the reference's duplicate merging (generalized per north_rule), built
+  * on ONE pointer-doubling loop ([[pointerDoubling]]) whose checkpointing
+  * is a parameter: in-query callers ([[connectedComponents]], q33/q45/q55/
+  * q61, SparkEntry.entry) cut lineage with `localCheckpoint`; the ER
+  * pipeline (er.Pipeline.forestLabels) checkpoints every round to parquet
+  * for crash resume ([[Parquet]]).
   */
 object Components {
   import Tables.load
 
-  /** Min-label propagation to fixpoint. vertices: (id); edges: (src, dst).
+  /** One pointer-doubling round. `advanced` counts the rows whose parent
+    * moved up this round. `rows` and `partitions` describe the round's
+    * checkpoint table; both are `None` when the loop collects no stats
+    * (in-query mode, or a [[Parquet]] mode with `collectStats = false`). */
+  final case class IterationMetrics(
+      iteration: Int, advanced: Long, rows: Option[Long], partitions: Option[Int])
+
+  /** How [[pointerDoubling]] materializes each round and cuts its lineage. */
+  sealed trait Checkpoint {
+    /** The first round to run and the parent map it starts from: round 0
+      * and `parents`, unless a resumable mode finds earlier checkpoints. */
+    private[ops] def start(parents: DataFrame): (Int, DataFrame)
+    /** Materializes round `iter` of (id, par, adv); returns the (id, par)
+      * frame with its lineage cut and the round's metrics. */
+    private[ops] def save(jumped: DataFrame, iter: Int): (DataFrame, IterationMetrics)
+    private[ops] def describe: String
+  }
+
+  /** `localCheckpoint(eager)` per round: lineage-free, not resumable. For
+    * closures that run inside one query. */
+  case object InQuery extends Checkpoint {
+    // round 0 self-joins the parent map, so an uncut input (the
+    // neighbour-min aggregate) would be computed twice in that one job
+    private[ops] def start(parents: DataFrame) = (0, parents.localCheckpoint(true))
+    private[ops] def save(jumped: DataFrame, iter: Int) = {
+      val cut = jumped.localCheckpoint(true)
+      val advanced = cut.agg(coalesce(sum(col("adv")), lit(0L))).collect()(0).getLong(0)
+      (cut.select(col("id"), col("par")), IterationMetrics(iter, advanced, None, None))
+    }
+    private[ops] def describe = "in-query"
+  }
+
+  /** Parquet checkpoints under `workDir`, the ER pipeline's resumable
+    * contract:
+    *  - round k writes `parents_iter_k`; its advance count rides the write
+    *    as an `observe` aggregate (no extra job);
+    *  - `resume = true` restarts after the highest COMPLETE checkpoint;
+    *    a fresh run first deletes every `parents_iter_*` and
+    *    `labels_iter_*` a previous run left, so no stale higher-indexed
+    *    table shadows this run's output;
+    *  - `collectStats = true` appends per-partition row counts as
+    *    `parent_metrics_iter_k.jsonl` (one extra scan per round).
+    * The caller writes its final labels to [[labelPath]] at the round
+    * index the loop returns. */
+  final case class Parquet(workDir: String, resume: Boolean, collectStats: Boolean)
+      extends Checkpoint {
+    private def parPath(i: Int) = s"$workDir/parents_iter_$i"
+    def labelPath(i: Int): String = s"$workDir/labels_iter_$i"
+
+    /** Index and path of each `<prefix><k>` entry in the workDir, listed
+      * through the Hadoop filesystem — java.io.File would silently no-op
+      * on hdfs:///s3a:// workDirs (listFiles returns null), leaving stale
+      * checkpoints live and making resume silently restart from 0. */
+    private def iterEntries(spark: SparkSession, prefix: String)
+        : (FileSystem, Vector[(Int, Path)]) = {
+      val dir = new Path(workDir)
+      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.mkdirs(dir): Unit
+      (fs, fs.listStatus(dir).toVector.flatMap { st =>
+        val n = st.getPath.getName
+        if (n.startsWith(prefix))
+          scala.util.Try(n.stripPrefix(prefix).toInt).toOption.map(i => (i, st.getPath))
+        else None
+      })
+    }
+
+    private[ops] def start(parents: DataFrame) = {
+      val spark = parents.sparkSession
+      if (resume) {
+        // A directory that merely exists is not a checkpoint — a job
+        // killed mid-write leaves a partial task-file subset (committer
+        // v2 / object stores) or only `_temporary` (v1); resuming from
+        // either silently drops rows. Completeness = the committer's
+        // `_SUCCESS` marker (needs the default
+        // `mapreduce.fileoutputcommitter.marksuccessfuljobs=true`);
+        // Iceberg commits atomically, so a readable table IS committed.
+        // Incomplete leftovers above the resume point are overwritten.
+        val (fs, entries) = iterEntries(spark, "parents_iter_")
+        def complete(p: Path): Boolean =
+          fs.exists(if (TableIO.format == "iceberg") p else new Path(p, "_SUCCESS"))
+        val done = entries.collect { case (i, p) if complete(p) => i }
+        if (done.isEmpty) (0, parents)
+        else (done.max + 1, TableIO.read(spark, parPath(done.max)))
+      } else {
+        // a failed delete FAILS LOUD: a survivor would be read by
+        // max-index consumers in place of this run's output
+        for (prefix <- Seq("parents_iter_", "labels_iter_")) {
+          val (fs, entries) = iterEntries(spark, prefix)
+          for ((_, p) <- entries if !fs.delete(p, true) && fs.exists(p))
+            throw new java.io.IOException(
+              s"cannot remove stale checkpoint $p — it would shadow this run's output")
+        }
+        (0, parents)
+      }
+    }
+
+    private[ops] def save(jumped: DataFrame, iter: Int) = {
+      val obs = org.apache.spark.sql.Observation(s"parents_iter_$iter")
+      jumped.observe(obs, sum(col("adv")).as("advanced"))
+        .select(col("id"), col("par"))
+        .write.mode(SaveMode.Overwrite).format(TableIO.format).save(parPath(iter))
+      val advanced = obs.get.apply("advanced") match {
+        case null => 0L
+        case l: java.lang.Long => l.longValue()
+      }
+      val par = TableIO.read(jumped.sparkSession, parPath(iter))
+      if (!collectStats) (par, IterationMetrics(iter, advanced, None, None))
+      else {
+        val perPartition = timed(s"doubling.metrics_$iter") {
+          par.groupBy(spark_partition_id().as("partition_id"))
+            .agg(count(lit(1)).as("rows")).collect()
+        }
+        // JSON lines via NIO: durable per round without spinning a Spark
+        // job for a handful of rows
+        val json = perPartition.sortBy(_.getInt(0)).map(r =>
+          s"""{"iteration":$iter,"partition_id":${r.getInt(0)},""" +
+            s""""rows":${r.getLong(1)},"advanced":$advanced}""").mkString("", "\n", "\n")
+        Files.writeString(Paths.get(s"$workDir/parent_metrics_iter_$iter.jsonl"), json)
+        (par, IterationMetrics(iter, advanced,
+          Some(perPartition.map(_.getLong(1)).sum), Some(perPartition.length)))
+      }
+    }
+
+    private[ops] def describe = s"workDir=$workDir; resume with a higher maxIterations"
+  }
+
+  /** Shuffle width for a loop over `rows` rows. Two regimes, capped at the
+    * session's shuffle partitions: big graphs get ≥ cores partitions (full
+    * scheduling waves, ~2M rows per partition as the memory bound); tiny
+    * graphs get only as many partitions as have ≥~512 rows of real work —
+    * 32 near-empty tasks per stage cost ~1 s per round of pure scheduling
+    * overhead on a 100-row graph. */
+  private[graft] def loopWidth(spark: SparkSession, rows: Long): Int =
+    math.min(spark.conf.get("spark.sql.shuffle.partitions").toLong, math.max(
+      rows / 2000000L + 1L,
+      math.min(spark.sparkContext.defaultParallelism.toLong, rows / 512L + 1L))).toInt
+
+  /** Runs `body` with the session's shuffle partitions set to `parts`. */
+  private[graft] def atWidth[T](spark: SparkSession, parts: Int)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
+  /** Pointer doubling (par ← par∘par) over a parent map `(id, par)` that is
+    * acyclic apart from self-loops: a root either has no row or has
+    * par = id. A depth-d tree resolves in ⌈log₂ d⌉ rounds. A round
+    * converges when nothing advanced, or, after an advancing round, when
+    * an early-out probe finds no parent that still has a parent — which
+    * saves the pure confirm round. A resumed checkpoint is probed before
+    * the first round, so a resumed converged run does not iterate.
     *
-    * Loop shape mirrors er.Pipeline.cluster: the neighbor-min and the self
-    * label merge in ONE aggregate (union + groupBy min — no changed-flag
-    * left join), TWO propagation steps amortize each checkpoint, and
-    * convergence is "sum(label) unchanged" (labels only decrease under
-    * min-propagation) — a tiny agg over the just-checkpointed frame
-    * instead of a full `filter(changed).isEmpty` recompute. Driver
-    * actions per round: 2 (checkpoint + cached-scan agg) vs 3 full-lineage
-    * actions before.
-    */
+    * Returns (id, root) with one row per row of `parents`, the metrics of
+    * the rounds this call ran, and the index after the last completed
+    * round (resumed rounds included). Throws IllegalStateException when
+    * `maxIter` rounds do not converge: assembling labels from non-root
+    * parents would silently split clusters. */
+  def pointerDoubling(parents: DataFrame, mode: Checkpoint, maxIter: Int)
+      : (DataFrame, Vector[IterationMetrics], Int) = {
+    def settled(par: DataFrame): Boolean = par
+      .join(par.select(col("id").as("par"), col("par").as("gpar")), Seq("par"))
+      .filter(col("gpar") =!= col("par")).limit(1).isEmpty
+    val (startIter, par0) = mode.start(parents.select(col("id"), col("par")))
+    var par = par0
+    var iter = startIter
+    var converged = startIter > 0 && timed("doubling.resume_probe")(settled(par))
+    val metrics = Vector.newBuilder[IterationMetrics]
+    while (!converged && iter < maxIter) {
+      val jumped = par
+        .join(par.select(col("id").as("par"), col("par").as("gpar")), Seq("par"), "left")
+        .select(col("id"), coalesce(col("gpar"), col("par")).as("par"),
+          (col("gpar").isNotNull && col("gpar") =!= col("par")).cast("long").as("adv"))
+      val (next, m) = timed(s"doubling.write_$iter")(mode.save(jumped, iter))
+      metrics += m
+      par = next
+      converged = m.advanced == 0L || timed(s"doubling.probe_$iter")(settled(par))
+      iter += 1
+    }
+    if (!converged)
+      throw new IllegalStateException(
+        s"pointer doubling not converged within $maxIter rounds (${mode.describe})")
+    (par.select(col("id"), col("par").as("root")), metrics.result(), iter)
+  }
+
+  /** Min-member-id labels of an undirected graph. vertices: (id); edges:
+    * (src, dst). Output: (id, label) for every vertex.
+    *
+    * Star contraction: parent(x) = min(neighbours ∪ x) is a DECREASING
+    * forest, so [[pointerDoubling]] takes every touched vertex to its
+    * tree root — for the clique/star components of near-dup graphs the
+    * tree depth is 1 and one round settles it. An edge whose endpoints
+    * landed in different trees ("two leaves of one centre": {1–3, 2–3}
+    * roots both 1 and 2) re-enters as a contracted edge between roots,
+    * and this function recurses on that residual label graph, which is
+    * usually empty. Recursion terminates: the largest vertex of every
+    * residual component has a smaller neighbour, so it is not a root and
+    * each level has strictly fewer vertices. The component minimum has no
+    * smaller neighbour, so it is always a root, and composing the levels'
+    * labels yields exactly min-member-id labels (ComponentsSpec checks
+    * them against a driver-side union-find).
+    *
+    * Only vertices touched by an edge can leave label = id, so the loop
+    * runs over the edge-induced subgraph and untouched vertices join back
+    * as identity. Doubling rounds across all levels count against
+    * `maxIter`; exhausting it throws IllegalStateException. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame, maxIter: Int = 25): DataFrame = {
     val spark = vertices.sparkSession
     val und = edges.select(col("src").as("a"), col("dst").as("b"))
       .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
-      .persist()
-    // Size the loop's shuffle width from the DATA (same rule as
-    // er.Pipeline.cluster): the match graph is far smaller than its source
-    // tables, and every round pays per-task scheduling cost at the loop
-    // width. The count also materializes the persisted edge table before
-    // the first round.
-    val edgeRows = und.count()
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // Two regimes: big graphs get ≥ cores partitions (full scheduling
-    // waves, ~2M rows/partition memory bound); tiny graphs get only as
-    // many partitions as have ≥~512 rows of real work — scheduling 32
-    // near-empty tasks per stage × 5 stages × round costs ~1 s/round of
-    // pure task overhead on a 100-row graph.
-    val loopParts = math.min(sessionParts.toLong, math.max(
-      edgeRows / 2000000L + 1L,
-      math.min(spark.sparkContext.defaultParallelism.toLong, edgeRows / 512L + 1L))).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-        .collect()(0).getDecimal(0)
-    def propagate(l: DataFrame): DataFrame =
-      und.join(l.select(col("id").as("b"), col("label")), Seq("b"))
-        .select(col("a").as("id"), col("label"))
-        .unionByName(l)
-        .groupBy(col("id")).agg(min(col("label")).as("label"))
-    try {
-      // Only vertices TOUCHED by an edge can ever leave label = id under
-      // min-propagation — the loop runs over the edge-induced subgraph
-      // and untouched vertices join back as identity at the end. On
-      // sparse match graphs (the common case: a 200k-vertex corpus with
-      // tens of real duplicate edges) this shrinks every per-round
-      // shuffle from corpus-sized to match-graph-sized (measured
-      // 4.9 s → sub-second on q33 at sf0.1 with 10 edges), and at
-      // 10^12 rows it is the difference between iterating over the
-      // corpus and iterating over the duplicates.
-      var labels = und.select(col("a").as("id")).distinct()
-        .withColumn("label", col("id")).localCheckpoint(true)
-      var prevSum = labelSum(labels)
-      var iter = 0
-      var converged = false
-      while (!converged && iter < maxIter) {
-        val next = propagate(propagate(labels)).localCheckpoint(true)
-        val curSum = labelSum(next)
-        labels = next
-        // sum-unchanged certifies the fixpoint one confirm round late; an
-        // early-out probe (any edge still improvable?) after an advancing
-        // round is one cheap job instead of a whole extra round (same
-        // rationale as er.Pipeline.cluster's probe)
-        converged = curSum.compareTo(prevSum) == 0 ||
-          und.join(labels.select(col("id").as("b"), col("label").as("lb")), Seq("b"))
-            .join(labels.select(col("id").as("a"), col("label").as("la")), Seq("a"))
-            .filter(col("lb") < col("la")).limit(1).isEmpty
-        prevSum = curSum
-        iter += 1
-      }
-      vertices.select(col("id"))
-        .join(labels.withColumnRenamed("label", "touched_label"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("touched_label"), col("id")).as("label"))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      und.unpersist()
-    }
-  }
-
-  /** Star-contraction components: the production fast path for the
-    * dedup-lifecycle graphs (q55), where verified near-dup components are
-    * overwhelmingly CLIQUES/STARS (every member of a duplicate group
-    * passes the pairwise Jaccard gate against the rest).
-    *
-    * Phase 1 — min-neighbor star forest: parent(x) = min(neighbors ∪ x).
-    * parent < x strictly for non-roots, so the map is an acyclic
-    * DECREASING forest; pointer doubling (par ← par∘par, the same kernel
-    * as er.Pipeline.forestLabels) reaches every root in ⌈log₂ depth⌉
-    * rounds — for clique/star components depth is 1 and the loop exits
-    * after one zero-advance round, vs the generic fixpoint's
-    * propagate-propagate-checkpoint-agg per round.
-    *
-    * Phase 2 — residual contraction (what makes this ALWAYS bit-equal to
-    * [[connectedComponents]], not a clique-only shortcut): an edge whose
-    * endpoints landed in different trees ("two leaves of one center":
-    * {1–3, 2–3} roots both 1 and 2) re-enters as a CONTRACTED edge
-    * between labels; the generic loop then runs on the label graph —
-    * usually EMPTY, and always ≤ the original graph, never larger. The
-    * component min is itself always a root (it has no smaller neighbor),
-    * so composing contracted labels over phase-1 labels yields exactly
-    * min-member-id labels — ComponentsSpec proves bit-equality on
-    * cliques, chains, the leaf-pair counterexample, and random graphs.
-    *
-    * Scale: phase 1 is one edge-sized aggregate plus log-depth
-    * self-joins of an (id, par) frame — no per-round full-graph
-    * propagate; at 10^12 docs the dedup graph's components are tiny and
-    * phase 2 is empty, so the whole closure costs ~3 small shuffles. */
-  def starContractedComponents(vertices: DataFrame, edges: DataFrame): DataFrame = {
-    val spark = vertices.sparkSession
-    val und = edges.select(col("src").as("a"), col("dst").as("b"))
-      .unionByName(edges.select(col("dst").as("a"), col("src").as("b")))
       .persist() // scoped: released in the finally below, not at harness drain
-    // Size the loop's shuffle width from the DATA (same two-regime rule
-    // as connectedComponents): the match graph is far smaller than its
-    // source tables, and each doubling round's join/checkpoint/agg pays
-    // per-task scheduling cost at the loop width — 32 near-empty tasks
-    // per stage on a 100-row graph is ~1 s/round of pure overhead, and
-    // tiny graphs are exactly this fast path's common case. The count
-    // also materializes the persisted edge table before round 1.
-    val edgeRows = und.count()
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.min(sessionParts.toLong, math.max(
-      edgeRows / 2000000L + 1L,
-      math.min(spark.sparkContext.defaultParallelism.toLong, edgeRows / 512L + 1L))).toInt
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts.toString)
-    try {
-      val par0 = und.groupBy(col("a").as("id"))
+    // the count also materializes the persisted edge table before round 0
+    try atWidth(spark, loopWidth(spark, und.count())) {
+      val parents = und.groupBy(col("a").as("id"))
         .agg(min(col("b")).as("nmin"))
         .select(col("id"), least(col("nmin"), col("id")).as("par"))
-      var par = par0.localCheckpoint(true)
-      var advanced = if (edgeRows == 0L) 0L else 1L
-      while (advanced > 0L) {
-        val jumped = par
-          .join(par.select(col("id").as("par"), col("par").as("gpar")),
-            Seq("par"), "left")
-          .select(col("id"), coalesce(col("gpar"), col("par")).as("par"),
-            (col("gpar").isNotNull && col("gpar") =!= col("par"))
-              .cast("long").as("adv"))
-          .localCheckpoint(true)
-        advanced = jumped.agg(coalesce(sum(col("adv")), lit(0L)))
-          .collect()(0).getLong(0)
-        par = jumped.select(col("id"), col("par"))
-      }
-      val lab = par.select(col("id"), col("par").as("label"))
-      // residual: edges crossing phase-1 trees, contracted to label space.
-      // NO checkpoint: viol is consumed EAGERLY on both paths below (the
-      // isEmpty probe; on the rare non-empty path the inner loop's own
-      // edge count) while `und` is still persisted, and the RETURNED plan
-      // never references it — the inner connectedComponents' result is
-      // built from its own checkpoints plus `lab` (checkpointed above).
-      // The former eager localCheckpoint was one whole extra job per
-      // closure call to materialize a frame that is empty in the common
-      // case.
-      val viol = und
+      val (roots, _, rounds) = pointerDoubling(parents, InQuery, maxIter)
+      val lab = roots.select(col("id"), col("root").as("label"))
+      // NO checkpoint: the residual is consumed EAGERLY (the isEmpty probe;
+      // on the rare non-empty path the recursion's own edge count) while
+      // `und` is still persisted, and the returned plan never references
+      // it — the recursion's result is built from its own checkpoints
+      // plus `lab` (checkpointed by the loop)
+      val residual = und
         .join(lab.select(col("id").as("a"), col("label").as("la")), Seq("a"))
         .join(lab.select(col("id").as("b"), col("label").as("lb")), Seq("b"))
         .filter(col("la") =!= col("lb"))
         .select(col("la").as("src"), col("lb").as("dst")).distinct()
       val resolved =
-        if (viol.isEmpty) lab
+        if (residual.isEmpty) lab
         else {
           val merged = connectedComponents(
-            lab.select(col("label").as("id")).distinct(), viol)
+            lab.select(col("label").as("id")).distinct(), residual, maxIter - rounds)
           lab.join(
               merged.select(col("id").as("label"), col("label").as("mlabel")),
               Seq("label"))
             .select(col("id"), col("mlabel").as("label"))
         }
-      // the result plan must not reference the about-to-be-unpersisted
-      // edge frame: `resolved` is either `lab` (checkpointed) or
-      // lab ⋈ merged, where merged is built from the inner loop's own
-      // checkpoints plus lab — viol (the only und-derived frame here)
-      // was consumed eagerly above, so the final join is safe after
-      // release
       vertices.select(col("id"))
         .join(resolved.withColumnRenamed("label", "touched_label"), Seq("id"), "left")
         .select(col("id"), coalesce(col("touched_label"), col("id")).as("label"))
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-      und.unpersist()
-    }
+    } finally und.unpersist()
   }
 
   /** Incremental cluster maintenance: merge a batch of NEW edges into an
     * existing labeling without re-clustering the full edge history.
     *
-    * Under min-label propagation a component's label is its minimum
-    * member id, so a prior labeling is a lossless contraction of the
-    * prior edge set: the star {(id, label) | label ≠ id} reproduces
-    * exactly the prior components, with depth 1. Clustering
-    * (prior star ∪ new edges) therefore yields labels BIT-IDENTICAL to
-    * re-clustering (all prior edges ∪ new edges) — but the loop input is
-    * one row per previously-clustered vertex instead of the whole edge
-    * history, and it converges in ~1 doubling round unless the new edges
-    * chain many old components together (ComponentsSpec proves the
-    * bit-equality both ways).
+    * A component's label is its minimum member id, so a prior labeling is
+    * a lossless contraction of the prior edge set: the star
+    * {(id, label) | label ≠ id} reproduces exactly the prior components,
+    * with depth 1. Clustering (prior star ∪ new edges) therefore yields
+    * labels BIT-IDENTICAL to re-clustering (all prior edges ∪ new edges)
+    * — but the loop input is one row per previously-clustered vertex
+    * instead of the whole edge history, and it converges in ~1 doubling
+    * round unless the new edges chain many old components together
+    * (ComponentsSpec proves the bit-equality both ways).
     *
     * This is the micro-batch companion of [[StreamOps.incrementalBlocking]]:
     * ingest streams pairs continuously, and each maintenance window folds
     * the new accepted edges into the persisted labels — the labels table
-    * IS the checkpoint, same as er.Pipeline.cluster's resume contract.
+    * IS the checkpoint, as in the [[Parquet]] checkpoint mode's resume
+    * contract.
     *
-    * prior: (id, label) — a fixpoint of min-label propagation (labels
-    * from [[connectedComponents]] / er.Pipeline.forestLabels qualify);
+    * prior: (id, label) — min-member-id labels (from
+    * [[connectedComponents]] or er.Pipeline.forestLabels);
     * newEdges: (src, dst). Output: (id, label) covering prior ids ∪ new
     * edge endpoints. */
   def incrementalComponents(prior: DataFrame, newEdges: DataFrame): DataFrame = {
@@ -228,14 +291,12 @@ object Components {
       .unionByName(newEdges.select(col("src").as("id")))
       .unionByName(newEdges.select(col("dst").as("id")))
       .distinct()
-    // star ∪ new-edges is the IDEAL input for the star-contraction path:
-    // the prior labeling is already depth-1 (every satellite points at
-    // its component min), so phase 1 resolves it in one pointer-doubling
-    // round and only the handful of NEW cross-component bridges reach
-    // the residual label graph — labels stay bit-equal to the generic
-    // fixpoint (ComponentsSpec proves both the equality and that
-    // incremental == full re-clustering through this path)
-    starContractedComponents(vertices,
+    // star ∪ new-edges is the IDEAL input for star contraction: the prior
+    // labeling is already depth-1 (every satellite points at its
+    // component min), so one pointer-doubling round resolves it and only
+    // the handful of NEW cross-component bridges reach the residual label
+    // graph (ComponentsSpec proves incremental == full re-clustering)
+    connectedComponents(vertices,
       star.unionByName(newEdges.select(col("src"), col("dst"))))
   }
 
@@ -244,7 +305,7 @@ object Components {
     * connected components; label = min reachable name_id. */
   def q33Components(spark: SparkSession, dir: String): DataFrame = {
     val (interned, edges) = nameGraph(spark, dir)
-    starContractedComponents(interned.select(col("name_id").as("id")), edges)
+    connectedComponents(interned.select(col("name_id").as("id")), edges)
       .select(col("id").as("name_id"), col("label"))
   }
 
@@ -301,7 +362,7 @@ object Components {
     val (interned, edges) = nameGraph(spark, dir)
     val oldEdges = edges.filter(pmod(col("src") + col("dst"), lit(2)) === 0)
     val newEdges = edges.filter(pmod(col("src") + col("dst"), lit(2)) === 1)
-    val prior = starContractedComponents(
+    val prior = connectedComponents(
       interned.select(col("name_id").as("id")), oldEdges)
     incrementalComponents(prior, newEdges)
       .select(col("id").as("name_id"), col("label"))

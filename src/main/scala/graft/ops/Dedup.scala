@@ -238,12 +238,11 @@ object Dedup {
   def q55DedupLifecycle(spark: SparkSession, dir: String): DataFrame = {
     val docs = load(spark, dir, "documents")
     val verified = verifyJaccard(docs, q22LshPairs(spark, dir), 0.4)
-    // star-contraction closure: verified near-dup components are cliques
-    // (every group member passes the pairwise gate), so the min-neighbor
-    // forest resolves them in one pointer-doubling round and the generic
-    // fixpoint loop only ever sees the (typically empty) residual label
-    // graph — bit-equal to connectedComponents per ComponentsSpec
-    val labels = Components.starContractedComponents(
+    // verified near-dup components are cliques (every group member passes
+    // the pairwise gate), so the star-contraction closure's min-neighbor
+    // forest resolves them in one pointer-doubling round and its residual
+    // label graph is typically empty
+    val labels = Components.connectedComponents(
       docs.select(col("doc_id").as("id")),
       verified.select(col("src"), col("dst")))
     labels.select(col("id").as("doc_id"), col("label").as("keeper"),

@@ -99,8 +99,8 @@ object LinkGraph {
     *    per iteration. Persist is harness-released via [[Caches]].
     *  - `localCheckpoint(eager)` every `checkpointEvery` iterations
     *    truncates lineage (same rationale as Components' loop; for
-    *    crash-RESUMABLE runs swap in a parquet checkpoint per
-    *    er.Pipeline.cluster's labelPath contract — the loop body is
+    *    crash-RESUMABLE runs swap in a parquet checkpoint per the
+    *    Components.Parquet checkpoint mode's contract — the loop body is
     *    identical).
     *
     * Fixed-point BIGINT arithmetic (1e-12 units, floor division): on a

@@ -26,16 +26,4 @@ object TableIO {
 
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.format(format).load(path)
-
-  /** True iff `path` holds a COMPLETE committed table. A directory that
-    * merely exists is not evidence: a job killed mid-write leaves a
-    * partial task-file subset (committer v2 / object stores) or only
-    * `_temporary` (v1) — resuming from either silently drops rows from
-    * every later checkpoint, the exact corruption a resume contract must
-    * rule out. Parquet commits are marked by the committer's `_SUCCESS`
-    * flag file; Iceberg commits atomically through its metadata layer,
-    * so a readable table IS a committed one there. */
-  def isComplete(path: String): Boolean =
-    if (format == "iceberg") new java.io.File(path).exists()
-    else new java.io.File(path, "_SUCCESS").exists()
 }

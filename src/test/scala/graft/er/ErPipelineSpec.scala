@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.SparkTestSession
+import graft.ops.ReferenceComponents
 
 /** End-to-end pipeline gates from BASELINE.json:
   * - pairwise F1 ≥ 0.99 on labeled pairs sharing a blocking key
@@ -55,7 +56,7 @@ class ErPipelineSpec extends AnyFunSuite {
       s"universe size: $weighted vs $expanded")
   }
 
-  test("forestLabels equals generic cluster labels on real match edges") {
+  test("forestLabels equals driver-side union-find labels on real match edges") {
     val cfg = Pipeline.Config(seed = 42L, nPages = 800, nEntities = 150,
       workDir = freshDir("forest_eq"))
     val pages = Corpus.pages(spark, cfg.nPages, cfg.nEntities, cfg.seed).toDF()
@@ -69,10 +70,9 @@ class ErPipelineSpec extends AnyFunSuite {
       "matchEdges must emit at most one out-edge per node")
     val (forest, fm) = Pipeline.forestLabels(vertices, edges,
       cfg.copy(workDir = freshDir("forest_eq_f")))
-    val (generic, _) = Pipeline.cluster(vertices, edges,
-      cfg.copy(workDir = freshDir("forest_eq_g")))
-    assert(forest.exceptAll(generic).isEmpty && generic.exceptAll(forest).isEmpty,
-      "forest labels diverge from generic min-label fixpoint")
+    assert(ReferenceComponents.collected(forest) ==
+      ReferenceComponents.labels(vertices, edges),
+      "forest labels diverge from the driver-side union-find")
     assert(fm.nonEmpty && fm.size <= 3,
       s"variant forest should resolve in <=3 pointer-jump rounds, took ${fm.size}")
   }
@@ -113,35 +113,38 @@ class ErPipelineSpec extends AnyFunSuite {
     val edges = Pipeline.matchEdges(pairs, strings, cfgBase).cache()
     val vertices = strings.select($"string_id")
 
-    // full run on the corpus edges
-    val (labelsFull, mFull) = Pipeline.cluster(vertices, edges,
+    // full run on the corpus edges; collected now, because the resumed run
+    // rewrites the same labels table and a lazy read would go stale
+    val (labelsFull, mFull) = Pipeline.forestLabels(vertices, edges,
       cfgBase.copy(workDir = dirFull))
+    val full = ReferenceComponents.collected(labelsFull)
     // resume from a CONVERGED checkpoint: the resume-entry probe must
     // certify it without spending a confirm round, and labels must match
-    val (labelsResumed, mResumed) = Pipeline.cluster(vertices, edges,
+    val (labelsResumed, mResumed) = Pipeline.forestLabels(vertices, edges,
       cfgBase.copy(workDir = dirFull, resume = true))
     assert(mResumed.isEmpty,
       "resume from a converged checkpoint must probe, not re-iterate")
-    assert(labelsFull.exceptAll(labelsResumed).isEmpty &&
-      labelsResumed.exceptAll(labelsFull).isEmpty,
+    assert(full == ReferenceComponents.collected(labelsResumed),
       "resumed labels differ from uninterrupted run")
-    assert(mFull.nonEmpty)
+    assert(mFull.nonEmpty && mFull.forall(m => m.rows.isDefined && m.partitions.isDefined))
 
-    // mid-run interruption needs a graph that CANNOT converge in one
-    // double-propagation round: a 9-vertex chain (min label walks 2 hops
-    // per round). Hitting the cap unconverged must FAIL LOUD (silently
-    // returning intermediate ancestors = split clusters)...
+    // mid-run interruption needs a forest that CANNOT converge in one
+    // doubling round: the chain 1→2→…→9 (depth 8 takes three rounds).
+    // Hitting the cap unconverged must FAIL LOUD (silently returning
+    // intermediate ancestors = split clusters)...
     val chainEdges = (1L until 9L).map(i => (i, i + 1)).toDF("src", "dst")
     val chainVerts = (1L to 9L).map(Tuple1(_)).toDF("id")
     intercept[IllegalStateException] {
-      Pipeline.cluster(chainVerts, chainEdges,
+      Pipeline.forestLabels(chainVerts, chainEdges,
         cfgBase.copy(workDir = dirPart, maxIterations = 1))
     }
     // ...and resume must pick up AT iteration 1 from the complete
     // checkpoint and reach the same fixpoint as an uninterrupted run
-    val (chainFull, _) = Pipeline.cluster(chainVerts, chainEdges,
-      cfgBase.copy(workDir = freshDir("resume_chain_full")))
-    val (chainResumed, mChain) = Pipeline.cluster(chainVerts, chainEdges,
+    val (chainFull, mChainFull) = Pipeline.forestLabels(chainVerts, chainEdges,
+      cfgBase.copy(workDir = freshDir("resume_chain_full"), collectStats = false))
+    assert(mChainFull.nonEmpty && mChainFull.forall(m => m.rows.isEmpty && m.partitions.isEmpty),
+      "collectStats = false must report no checkpoint rows or partitions")
+    val (chainResumed, mChain) = Pipeline.forestLabels(chainVerts, chainEdges,
       cfgBase.copy(workDir = dirPart, resume = true))
     assert(mChain.head.iteration == 1, "resume must continue at iteration 1")
     assert(chainFull.exceptAll(chainResumed).isEmpty &&

@@ -36,6 +36,9 @@ class ComponentsSpec extends AnyFunSuite {
     assert(incremental.exceptAll(full).isEmpty &&
       full.exceptAll(incremental).isEmpty,
       "incremental labels diverge from full re-clustering")
+    assert(ReferenceComponents.collected(full) ==
+      ReferenceComponents.labels(vertices, oldDf.unionByName(newDf)),
+      "full re-clustering diverges from the driver-side union-find")
     // the bridge edges really did merge old components
     val labelOf = incremental.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labelOf(1L) == labelOf(2L) && labelOf(1L) == labelOf(8L))
@@ -62,19 +65,14 @@ class ComponentsSpec extends AnyFunSuite {
     assert(m.keySet == Set(10L, 11L, 100L, 200L, 201L))
   }
 
-  test("starContractedComponents is bit-equal to the generic fixpoint on " +
-      "cliques, chains, the leaf-pair counterexample, and a random graph") {
-    import spark.implicits._
+  test("connectedComponents equals a driver-side union-find on eight graphs") {
     def check(name: String, vs: Seq[Long], es: Seq[(Long, Long)]): Unit = {
-      val vdf = vs.toDF("id")
-      val edf = es.toDF("src", "dst")
-      val fast = Components.starContractedComponents(vdf, edf)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val slow = Components.connectedComponents(vdf, edf)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(fast == slow, s"$name: fast=$fast slow=$slow")
+      val got = ReferenceComponents.collected(
+        Components.connectedComponents(vs.toDF("id"), es.toDF("src", "dst")))
+      val want = ReferenceComponents.labels(vs, es)
+      assert(got == want, s"$name: got=$got want=$want")
     }
-    // clique (the near-dup group shape): phase 1 alone must resolve it
+    // clique (the near-dup group shape): one doubling round resolves it
     check("clique", 1L to 5L,
       (1L to 5L).combinations(2).map(c => (c(0), c(1))).toSeq)
     // the shape that BREAKS a bare min-neighbor pass: 3's neighbors are
@@ -83,8 +81,15 @@ class ComponentsSpec extends AnyFunSuite {
     check("leaf-pair", Seq(1L, 2L, 3L), Seq((2L, 3L), (1L, 3L)))
     // a long chain: pointer doubling must walk log(depth) rounds
     check("chain", 1L to 12L, (1L until 12L).map(i => (i, i + 1)))
+    // a path visiting 1,12,2,11,…,6,7: half its vertices are min-neighbor
+    // roots, and only the recursion on the residual root chain 1–2–…–6
+    // joins them
+    val path = Seq(1L, 12L, 2L, 11L, 3L, 10L, 4L, 9L, 5L, 8L, 6L, 7L)
+    check("interleaved path", 1L to 12L, path.zip(path.tail))
     // isolated vertices + multiple components + reversed edge orientation
     check("mixed", 1L to 10L, Seq((7L, 2L), (2L, 9L), (5L, 4L), (10L, 10L)))
+    check("empty", 1L to 5L, Seq.empty)
+    check("self-loops", 1L to 5L, Seq((1L, 1L), (3L, 3L), (5L, 5L)))
     // deterministic pseudo-random graph (LCG — no Math.random in tests
     // either, same reproducibility discipline as the mains)
     var s = 42L
@@ -92,5 +97,14 @@ class ComponentsSpec extends AnyFunSuite {
     val rv = 1L to 60L
     val re = (1 to 80).map(_ => (nxt(60) + 1, nxt(60) + 1)).filter(p => p._1 != p._2)
     check("random", rv, re)
+  }
+
+  test("connectedComponents throws when maxIter rounds do not converge") {
+    // a 12-vertex chain needs ⌈log₂ 11⌉ doubling rounds; returning the
+    // one-round labels would silently split the component
+    intercept[IllegalStateException] {
+      Components.connectedComponents((1L to 12L).toDF("id"),
+        (1L until 12L).map(i => (i, i + 1)).toDF("src", "dst"), maxIter = 1).collect()
+    }
   }
 }
